@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs the headline query set on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Each query is fully
@@ -9,25 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    // flag-run hook (local iteration; the driver never sets this):
-    // SPARK_GRAFT_SQLCONF="k=v,k=v" builder-level overrides
-    sys.env.get("SPARK_GRAFT_SQLCONF").foreach(
-      _.split(",").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k.trim, v.trim)
-          case _ => ()
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.BoundedWindow.quietPlannerWarnings() // entry-point-scoped
+    val spark = LocalSession.fromEnv()
     val set = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(names) =>
         val want = names.split(",").map(_.trim).toSet
@@ -73,13 +54,18 @@ object Bench {
       if (load1 <= guardMax) "ok"
       else f"contended(loadavg=${load1}%.2f>$guardMax%.1f after ${guardWaits * 30}s)"
     val loadBefore = loadavg
-    val results = set.sortBy(_.name).map { q =>
-      val times = (1 to runs).map { _ =>
+    // only successful runs are timed: a failed run's elapsed time is
+    // not a measurement of the query, and a query with no successful
+    // run is named in "failed" instead of entering the total
+    val timed = set.sortBy(_.name).map { q =>
+      val times = (1 to runs).flatMap { _ =>
         val t0 = System.nanoTime()
-        try q.fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-        }
+        val ok =
+          try { q.fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+            false
+          }
         val elapsed = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache() // per-query persists must not leak across timings
         // multi-run mode medians must time INDEPENDENT runs: clearCache
@@ -90,10 +76,15 @@ object Bench {
         // purpose — amortization across a family IS the engine design
         // there (recorded in the artifact's "memo" field).
         if (runs > 1) graft.ops.FrameCache.clear(spark)
-        elapsed
+        if (ok) Some(elapsed) else None
       }
-      val sorted = times.sorted
-      (q.name, sorted(sorted.size / 2), times)
+      (q.name, times)
+    }
+    val failed = timed.collect { case (name, ts) if ts.isEmpty => "\"" + name + "\"" }
+      .mkString("[", ",", "]")
+    val results = timed.collect { case (name, ts) if ts.nonEmpty =>
+      val sorted = ts.sorted
+      (name, sorted(sorted.size / 2), ts)
     }
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -108,7 +99,7 @@ object Bench {
     val memoNote =
       if (runs > 1) "FrameCache cleared between timed runs (independent medians)"
       else "FrameCache memos amortize across the catalog (single-pass design)"
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rawRuns,"loadavg_before":$loadBefore,"loadavg_after":$loadavg,"load_guard":"$guardVerdict","load_guard_threshold":$guardMax,"runs_per_query":$runs,"memo":"$memoNote","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rawRuns,"failed":$failed,"loadavg_before":$loadBefore,"loadavg_after":$loadavg,"load_guard":"$guardVerdict","load_guard_threshold":$guardMax,"runs_per_query":$runs,"memo":"$memoNote","sf":"$sfDir"}""")
     spark.stop()
   }
 }

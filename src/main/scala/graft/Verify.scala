@@ -1,48 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each catalog query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check_oracles.py`).
+  * Queries run in `Catalog.all` declared order, so every run sees the
+  * same session history. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    // flag-run hook (local iteration; the driver never sets this):
-    // SPARK_GRAFT_SQLCONF="k=v,k=v" e.g. codegen-off / AQE-off sweeps
-    sys.env.get("SPARK_GRAFT_SQLCONF").foreach(
-      _.split(",").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k.trim, v.trim)
-          case _ => sys.error(
-            s"SPARK_GRAFT_SQLCONF segment '$kv' is not key=value")
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // every catalog window is BoundedWindow-fenced or CI-linted; the
-    // per-plan warning is pure noise HERE (and only here — the
-    // override is entry-point-scoped, see BoundedWindow)
-    graft.ops.BoundedWindow.quietPlannerWarnings()
+    val spark = LocalSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     // local-iteration escape hatch: dump only the named queries
     // (comma-separated). The driver never sets this.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val selected = Catalog.all.filter(qd => only.forall(_.contains(qd.name)))
+    selected.foreach { qd =>
+      try qd.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${qd.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${qd.name} failed: ${e.getMessage}")
       }
       // queries persist() hot intermediates; drop them between queries
       // so 50+ queries don't accumulate cached blocks
@@ -60,9 +36,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.flatMap(qd => qd.oracle.map(o => s"${q(qd.name)}: ${q(o)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -226,28 +226,24 @@ object DedupQueries {
         math.max(2, math.ceil((math.sqrt(8.0 * p + 1) - 1) / 2).toInt)
       }
 
-  /** q_dedup_ngram_jaccard body with the shingle-frame materialization
-    * strategy factored out (round-20 A/B hook; the shipped strategy is
-    * the `defs` entry's literal argument). Every variant computes the
-    * identical result — they differ only in HOW the shared `sh` frame
-    * is reused across its five consumers (dict build, both prefix
-    * self-join sides, both verify join-backs):
-    *  - "persist":  lazy persist (round-19 shipped shape)
-    *  - "eager":    persist + count() — one parallel pass builds every
-    *                cache block before any consumer task can race the
-    *                per-block cache locks (guide §5 cache discipline)
-    *  - "lcp":      eager localCheckpoint (lineage cut, blocks stored)
-    *  - "none":     no materialization; consumers recompute from scan */
-  private[graft] def ngramJaccard(s: SparkSession, d: String,
-      mat: String): DataFrame = {
-    val fence = mat.contains("fence")
-    val sh = mat match {
-      case "persist" => docShingles(s, d).persist()
-      case "eager"   => graft.ops.ScanPar.eager(docShingles(s, d))
-      case "lcp"     => docShingles(s, d).localCheckpoint(true)
-      case _         => docShingles(s, d, fence)
-    }
-    val prefix = prefixIndex(sh, shareDict = mat.contains("dict"))
+  /** q_dedup_ngram_jaccard body. The shingle frame `sh` feeds five
+    * consumers (dict build, both prefix self-join sides, both verify
+    * join-backs) and is NOT persisted: it is recomputed from the scan,
+    * behind the Materialize fence, with one shared dictionary build.
+    * Measured in round 20 (medians of 5 interleaved runs at local[32]):
+    * the round-19 lazy persist intermittently serialized the five
+    * consumers on per-block cache-lock races (bench runs bimodal
+    * 0.9/2.1 s, and anti-scaling: 32c 1.19 s vs 8c 0.84 s). Against
+    * it: persist 0.82, no persist 0.83, + fence 0.72, + fence + shared
+    * dict 0.67 s — and the shipped shape was the only unimodal one
+    * (max 0.80 vs 1.7–2.2 cold spikes). The fence stops the pushed
+    * isnotnull/size constraints re-running the whole shingle chain
+    * inside the serial scan task; the shared (persisted one-row) dict
+    * stops the self-join's clones re-running the explode→count
+    * pipeline. */
+  private[graft] def ngramJaccard(s: SparkSession, d: String): DataFrame = {
+    val sh = docShingles(s, d, fence = true)
+    val prefix = prefixIndex(sh, shareDict = true)
     // t = 3/5 exactly, so every bound is exact integer arithmetic:
     //  - size filter: 3*max <= 5*min
     //  - PPJoin positional filter: a shared prefix shingle at
@@ -322,22 +318,9 @@ object DedupQueries {
       // ceil(t|A|) is computed in exact integer arithmetic
       // ((3|A|+4) div 5) — no FP boundary risk. A size-ratio filter
       // (min >= t*max) prunes further. Candidates are then verified
-      // with exact Jaccard on the full shingle sets. Body + the shared
-      // shingle frame's materialization strategy: [[ngramJaccard]].
-      // Materialization strategy "dictfence" (round-20 A/B, medians of
-      // 5 interleaved at local[32]): the round-19 lazy persist of the
-      // shingle frame intermittently serialized its five consumers on
-      // per-block cache-lock races (driver runs bimodal 0.9/2.1 s, and
-      // ANTI-scaling: 32c 1.19 s vs 8c 0.84 s). Dropping the persist
-      // (recompute from scan; guide §5 — recompute is cheaper than the
-      // cache pressure) + the Materialize fence (stops the pushed
-      // isnotnull/size constraints re-running the whole shingle chain
-      // inside the serial scan task) + one shared dictionary build
-      // (persist the ONE-ROW dict frame so the self-join's clones stop
-      // re-running the explode→count pipeline) measured: persist 0.82,
-      // none 0.83, fence 0.72, dictfence 0.67 s — and dictfence is the
-      // only unimodal variant (max 0.80 vs 1.7–2.2 cold spikes).
-      (s, d) => ngramJaccard(s, d, "dictfence")),
+      // with exact Jaccard on the full shingle sets. Body, and the
+      // measured reason for its materialization shape: [[ngramJaccard]].
+      (s, d) => ngramJaccard(s, d)),
 
     // ---- edit-distance verify over bag-of-words candidates: docs
     // with IDENTICAL token sets (q_dedup_bow groups) differ only by

@@ -33,30 +33,21 @@ object TextQueries {
   private def docsPar(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     graft.ops.ScanPar.ensure(s, Tables(s, d, "documents"), col("doc_id"))
 
-  /** q_text_collocations body with the shared token stream's
-    * materialization factored out (round-20 A/B hook; the shipped
-    * strategy is the `defs` entry's literal argument). Every variant
-    * computes the identical result — they differ only in whether the
-    * floored tokenize chain re-derives under each of its THREE
-    * consumers (the eager corpus-size count, the unigram groupBy, the
-    * bigram side):
-    *  - "plain": round-19 shape — three independent derivations
-    *  - "ta":    tokenize ONCE into a persisted tokens-array frame;
-    *             the eager n-count job builds every cache block ALONE
-    *             (no concurrent-builder lock race — the round-20 ngram
-    *             failure mode), uni and bg then read finished blocks
-    *  - "uni":   persist the vocabulary-sized unigram aggregate: the
-    *             plan clones the whole scan→floor→explode→groupBy
-    *             pipeline under BOTH broadcast join sides (c1, c2) —
-    *             same duplicated-subtree shape as the ngram dict */
+  /** q_text_collocations body. The floored tokenize chain re-derives
+    * under each of its THREE consumers (the eager corpus-size count,
+    * the unigram groupBy, the bigram side), and the plan clones the
+    * unigram pipeline under both broadcast join sides. Kept unpersisted
+    * on measurement (round 20, interleaved at bench cadence; table in
+    * OPTIMIZATION_r20.md §8): persisting the tokens array was inside
+    * noise at sf0.1 and equal at 10× corpus (2.023 s both), and
+    * persisting the unigram aggregate was slower (1.558 s vs 1.014–
+    * 1.449). The duplicated pipelines are parallel scan work the cores
+    * absorb; a persist pays its materialization for nothing. */
   private[graft] def collocations(s: org.apache.spark.sql.SparkSession,
-      d: String, variant: String): DataFrame = {
-    val docs = docsPar(s, d)
-    val ta0 = docs.select(tokens(col("text")).as("w"))
-    val ta = if (variant == "ta") ta0.persist() else ta0
+      d: String): DataFrame = {
+    val ta = docsPar(s, d).select(tokens(col("text")).as("w"))
     val tok = ta.select(explode(col("w")).as("w"))
-    val uni0 = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
-    val uni = if (variant == "uni") uni0.persist() else uni0
+    val uni = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val n = tok.count()
     val bigramsOf = when(size(col("w")) >= 2,
       expr("transform(sequence(1, size(w) - 1)," +
@@ -1650,7 +1641,7 @@ object TextQueries {
          |  CROSS JOIN n
          |WHERE bg.c12 >= 5
          |ORDER BY lift DESC, w1, w2 LIMIT 20""".stripMargin))(
-      (s, d) => collocations(s, d, "plain")),
+      (s, d) => collocations(s, d)),
 
     // ---- distribution DRIFT per source: exact total-variation
     // distance between each source's doc-length histogram and the

@@ -45,24 +45,6 @@ class ChaosSpec extends SparkSpecBase {
     Seq(200L, 201L).foreach(n => assert(labels(n) == 200L, s"node $n"))
   }
 
-  test("band join survives an injected task failure in both stages (forked JVM)") {
-    // local[4,3]: a task failure must be retried, not kill the job —
-    // the shared spec session is local[4] (maxFailures=1), hence the
-    // fork. ChaosBandMain fails one map-stage task (shuffle write)
-    // and one reduce-stage task (BandJoinExec itself) and compares
-    // against the plain-Spark join result.
-    val java = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val pb = new ProcessBuilder(java, "-cp", cp, "-Xmx2g",
-      "graft.ChaosBandMain", sfDir)
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
-    val rc = proc.waitFor()
-    assert(rc === 0, s"chaos run failed rc=$rc:\n$out")
-    assert(out.contains("[chaos-band] OK"), s"missing success marker:\n$out")
-  }
-
   test("memoized graph frames rebuild after block loss (no session poisoning)") {
     // warm the whole memoized family (co-purchase, bipartite, edges,
     // label vector), snapshot a result...
