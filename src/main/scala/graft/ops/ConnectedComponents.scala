@@ -30,17 +30,12 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Ensure the session has a reliable checkpoint dir. Precedence:
-    * an already-set `sc.setCheckpointDir`, then the
-    * `spark.graft.checkpoint.dir` conf (a pipeline workspace sets this
-    * to its own checkpoint area), then a per-app temp dir. */
+  /** Ensure the session has a reliable checkpoint dir: an already-set
+    * `sc.setCheckpointDir` wins, else a per-app temp dir. */
   def ensureCheckpointDir(spark: SparkSession): Unit = synchronized {
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val dir = spark.conf.getOption("spark.graft.checkpoint.dir")
-        .getOrElse(s"${sys.props("java.io.tmpdir")}/graft-ckpt-" +
-          spark.sparkContext.applicationId)
-      spark.sparkContext.setCheckpointDir(dir)
-    }
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(
+        s"${sys.props("java.io.tmpdir")}/graft-ckpt-${spark.sparkContext.applicationId}")
   }
 
   /** Labels every node that appears in `edges` (columns `a`, `b`; must

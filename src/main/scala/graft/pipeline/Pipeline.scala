@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import graft.ops.Relational
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.slf4j.LoggerFactory
 
@@ -17,8 +19,8 @@ trait AppendSink extends Serializable {
     append(df, target)
 }
 
-/** Another live job holds this workspace's lease (see
-  * [[WorkspaceLease]]); the caller should back off or target a
+/** Another live job holds this workspace's lease (`_LEASE`, a
+  * [[LockFile]]); the caller should back off or target a
   * different workspace, not force through. */
 final class WorkspaceBusyException(workspace: String, holder: Option[String])
   extends IllegalStateException(
@@ -30,23 +32,10 @@ object ParquetAppendSink extends AppendSink {
     df.write.mode("append").parquet(target)
 }
 
-/** Partition-key-grouped append — the offline model of the Cassandra
-  * connector's write path (py:347-353: batches grouped by partition
-  * key, append mode): rows are repartitioned on the key (so one task
-  * owns one key group, like batch.grouping.key=partition) and laid out
-  * key-partitioned on storage. Like the Cassandra original, delivery
-  * is at-least-once per staged file; re-appends of the same file are
-  * prevented by the pipeline's checkpoint markers, not the sink. */
-final case class KeyedParquetAppendSink(keyCol: String, taskParallelism: Int = 8)
-    extends AppendSink {
-  def append(df: DataFrame, target: String): Unit =
-    df.repartition(taskParallelism, df(keyCol))
-      .write.mode("append").partitionBy(keyCol).parquet(target)
-}
-
-/** The CONNECTOR-shaped sink: the same partition-key-grouped append
-  * contract as [[KeyedParquetAppendSink]], but through the real
-  * DataSource V2 write protocol ([[graft.sources.KeyedTable]] —
+/** The CONNECTOR-shaped sink: the Cassandra connector's
+  * partition-key-grouped append contract (py:347-353: batches grouped
+  * by partition key, append mode), through the real DataSource V2
+  * write protocol ([[graft.sources.KeyedTable]] —
   * planner-enforced key clustering via RequiresDistributionAndOrdering,
   * staged files made visible only by driver-side manifest commit,
   * task-retry garbage never readable). This is the seam a live
@@ -166,9 +155,8 @@ final class Pipeline(
     * `count()` actions that re-ran every Oracle scan and join
     * (SURVEY.md §4.3). Metrics piggyback on the write's own pass, so
     * the count is free at any scale. */
-  // TrieMap: parallel runAll(n) has one thread per in-flight table
   val stageCounts: scala.collection.mutable.Map[String, Long] =
-    scala.collection.concurrent.TrieMap.empty
+    scala.collection.mutable.Map.empty
 
   /** Attach a row-count observation; `harvest()` reads it after the
     * write action and records + logs the count. */
@@ -198,14 +186,13 @@ final class Pipeline(
   private def bucketTableHealthy(tbl: String): Boolean =
     try {
       spark.table(tbl).limit(1).collect()
-      val loc = spark.sql(s"DESCRIBE FORMATTED $tbl").collect()
-        .find(_.getString(0).trim == "Location").map(_.getString(1).trim)
-      loc.exists { l =>
-        val p = new org.apache.hadoop.fs.Path(l)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.exists(p) && fs.listStatus(p).nonEmpty
-      }
+      val p = tableLocation(tbl)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.exists(p) && fs.listStatus(p).nonEmpty
     } catch { case _: Exception => false }
+
+  private def tableLocation(tbl: String): Path =
+    new Path(spark.sessionState.catalog.getTableMetadata(TableIdentifier(tbl)).location)
 
   /** Runs every table under an exclusive workspace lease: the staged
     * datasets, checkpoint markers, and catalog tables all key on the
@@ -215,78 +202,12 @@ final class Pipeline(
     * state. A crashed holder's lease expires after `leaseTtlMs` (the
     * heartbeat renews it per table). */
   def runAll(): Unit = {
-    val lease = new WorkspaceLease(
-      spark.sparkContext.hadoopConfiguration, spec.workspace, leaseTtlMs)
+    val lease = new LockFile(spark.sparkContext.hadoopConfiguration,
+      new Path(spec.workspace, "_LEASE"), leaseTtlMs)
     if (!lease.tryAcquire())
       throw new WorkspaceBusyException(spec.workspace, lease.currentHolder())
-    // iterative operators (ops.ConnectedComponents) take their reliable
-    // checkpoint dir from this conf — point it at the workspace so
-    // their state shares the pipeline's fault domain, not /tmp
-    if (spark.conf.getOption("spark.graft.checkpoint.dir").isEmpty)
-      spark.conf.set("spark.graft.checkpoint.dir", s"${spec.workspace}/rdd_checkpoints")
     try spec.tables.foreach { t => runTable(t); lease.renew() }
     finally lease.release()
-  }
-
-  /** Optional parallel table execution — the upgrade the reference
-    * sketched but never shipped (`threading` imported at py:3, loop
-    * kept sequential at py:441-442). Tables are scheduled into WAVES:
-    * within a wave no two tables share a staged source (raw staging —
-    * plain or bucketed — is one-per-source-name per workspace), so
-    * concurrent threads never race one staging dataset, while each
-    * table already owns its transformed/checkpoint/target dirs and
-    * log file by name. Waves run under the same exclusive workspace
-    * lease as the sequential driver; a failed table surfaces after
-    * its wave drains (completed tables keep their checkpoints and
-    * resume exactly like the sequential path). */
-  def runAll(parallelism: Int): Unit = {
-    if (parallelism <= 1) { runAll(); return }
-    val lease = new WorkspaceLease(
-      spark.sparkContext.hadoopConfiguration, spec.workspace, leaseTtlMs)
-    if (!lease.tryAcquire())
-      throw new WorkspaceBusyException(spec.workspace, lease.currentHolder())
-    if (spark.conf.getOption("spark.graft.checkpoint.dir").isEmpty)
-      spark.conf.set("spark.graft.checkpoint.dir", s"${spec.workspace}/rdd_checkpoints")
-    try waves(spec.tables).foreach { wave =>
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(parallelism, wave.size))
-      try {
-        val futures = wave.map(t =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = runTable(t)
-          }))
-        val failures = futures.flatMap(f =>
-          try { f.get(); None }
-          catch { case e: java.util.concurrent.ExecutionException =>
-            Option(e.getCause).orElse(Some(e)) })
-        failures.headOption.foreach(throw _)
-      } finally pool.shutdownNow()
-      lease.renew()
-    } finally lease.release()
-  }
-
-  /** Greedy wave packing: a table joins the first wave holding none
-    * of its source names. Declaration order is preserved WITHIN a
-    * wave; across waves a later-declared table may run earlier than a
-    * source-sharing predecessor's successor (greedy packing reorders
-    * independents). Tables are independent by contract — each owns
-    * its transformed/checkpoint/target dirs, and shared RAW staging
-    * is what the waves serialize — so no cross-table ordering beyond
-    * that is provided or should be relied on. */
-  private def waves(tables: Seq[TableSpec]): Seq[Seq[TableSpec]] = {
-    val acc = scala.collection.mutable.ArrayBuffer
-      .empty[(scala.collection.mutable.ArrayBuffer[TableSpec],
-        scala.collection.mutable.Set[String])]
-    tables.foreach { t =>
-      val srcs = t.sources.map(_.name).toSet
-      acc.find { case (_, used) => srcs.forall(!used.contains(_)) } match {
-        case Some((wave, used)) => wave += t; used ++= srcs
-        case None =>
-          acc += ((scala.collection.mutable.ArrayBuffer(t),
-            scala.collection.mutable.Set(srcs.toSeq: _*)))
-      }
-    }
-    acc.map(_._1.toSeq).toSeq
   }
 
   def runTable(t: TableSpec): Unit = {
@@ -302,7 +223,7 @@ final class Pipeline(
       // target maintenance is BEST-EFFORT: the load is durably
       // committed at this point, and a maintenance hiccup (e.g. a
       // lock timeout against a concurrent maintainer) must not mark
-      // the table failed and re-drive a completed wave — the next
+      // the table failed and re-drive a completed load — the next
       // run's hook folds whatever this one left
       try finishTarget(t)
       catch { case scala.util.control.NonFatal(e) =>
@@ -334,44 +255,40 @@ final class Pipeline(
       // reads co-located buckets and plans with no Exchange — the
       // shuffle is paid once at staging time, not per run.
       val staged = t.sources.map { s =>
-        val reread = s.bucketKey match {
-          case Some(key) =>
-            val tbl = bucketTableName(s.name)
-            if (!spark.catalog.tableExists(tbl)) {
-              binfo(s"[${t.targetTable}] extracting ${s.name} (bucketed by $key)")
-              val df = Relational.filterSql(source(s), s.filter.orNull)
-              val (odf, harvest) = observed(df, s"${t.targetTable}/extract_${s.name}")
-              Relational.sinkBucketed(odf, tbl, key, s.numBuckets, Some(key))
-              harvest()
-            } else if (!bucketTableHealthy(tbl)) {
-              // a job that died between catalog commit and data write
-              // (or whose storage was lost) leaves a table entry whose
-              // files don't read back — rebuild rather than hand the
-              // join a corrupt side
-              bwarn(s"[${t.targetTable}] bucketed raw ${s.name} unreadable — rebuilding")
-              spark.sql(s"DROP TABLE IF EXISTS $tbl")
-              val df = Relational.filterSql(source(s), s.filter.orNull)
-              Relational.sinkBucketed(df, tbl, key, s.numBuckets, Some(key))
-            } else {
-              binfo(s"[${t.targetTable}] bucketed raw ${s.name} already staged — skipping extract")
-            }
-            spark.table(tbl)
-          case None =>
-            val rawDir = spec.rawDir(s.name)
-            if (!storage.datasetExists(rawDir)) {
-              binfo(s"[${t.targetTable}] extracting ${s.name}")
-              val df = Relational.filterSql(source(s), s.filter.orNull)
-              val (odf, harvest) = observed(df, s"${t.targetTable}/extract_${s.name}")
-              Relational.sinkParquet(Relational.rebalance(odf, s.numPartitions), rawDir)
-              harvest()
-            } else {
-              binfo(s"[${t.targetTable}] raw ${s.name} already staged — skipping extract")
-            }
-            Relational.scanParquet(spark, rawDir)
+        val tbl = bucketTableName(s.name)
+        val rawDir = spec.rawDir(s.name)
+        val present = s.bucketKey match {
+          case None => storage.datasetExists(rawDir)
+          case Some(_) if !spark.catalog.tableExists(tbl) => false
+          case Some(_) if bucketTableHealthy(tbl) => true
+          case Some(_) =>
+            // a job that died between catalog commit and data write
+            // (or whose storage was lost) leaves a table entry whose
+            // files don't read back — rebuild rather than hand the
+            // join a corrupt side
+            bwarn(s"[${t.targetTable}] bucketed raw ${s.name} unreadable — rebuilding")
+            spark.sql(s"DROP TABLE IF EXISTS $tbl")
+            false
+        }
+        val kind = if (s.bucketKey.isDefined) "bucketed raw" else "raw"
+        if (present) {
+          binfo(s"[${t.targetTable}] $kind ${s.name} already staged — skipping extract")
+        } else {
+          binfo(s"[${t.targetTable}] extracting ${s.name}" +
+            s.bucketKey.fold("")(key => s" (bucketed by $key)"))
+          val df = Relational.filterSql(source(s), s.filter.orNull)
+          val (odf, harvest) = observed(df, s"${t.targetTable}/extract_${s.name}")
+          s.bucketKey match {
+            case Some(key) => Relational.sinkBucketed(odf, tbl, key, s.numBuckets, Some(key))
+            case None => Relational.sinkParquet(Relational.rebalance(odf, s.numPartitions), rawDir)
+          }
+          harvest()
         }
         // py:398 — always re-read from storage, never pass through
         // memory; alias by source name (py:135-138) so join conditions
         // and projections can use `source.col` qualified refs
+        val reread =
+          if (s.bucketKey.isDefined) spark.table(tbl) else Relational.scanParquet(spark, rawDir)
         s.name -> reread.alias(s.name)
       }.toMap
 
@@ -401,11 +318,11 @@ final class Pipeline(
     val checkpointDir = spec.checkpointDir(t.targetTable)
     val targetDir = spec.targetDir(t.targetTable)
     val files = storage.listParquet(transformedDir)
-    val total = files.map(storage.footerRowCount).sum // metadata-only
+    val counts = files.map(storage.footerRowCount) // metadata-only
+    val total = counts.sum
     var processed = 0L
-    files.foreach { file =>
+    files.zip(counts).foreach { case (file, rows) =>
       val name = file.substring(file.lastIndexOf('/') + 1)
-      val rows = storage.footerRowCount(file)
       if (storage.checkpointExists(checkpointDir, name)) {
         binfo(s"[${t.targetTable}] $name already loaded — skipping")
       } else {
@@ -450,11 +367,9 @@ final class Pipeline(
         // half-way can leave orphan files; sweep the location too)
         val tbl = bucketTableName(s.name)
         if (spark.catalog.tableExists(tbl)) {
-          val loc = spark.sql(s"DESCRIBE FORMATTED $tbl").collect()
-            .find(_.getString(0).trim == "Location")
-            .map(_.getString(1).trim)
+          val loc = tableLocation(tbl)
           spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          loc.foreach(storage.delete)
+          storage.delete(loc.toString)
         } else {
           // a write that died BEFORE the table committed to the catalog
           // leaves orphan files at the default managed location with no
@@ -464,9 +379,8 @@ final class Pipeline(
           // warehouses and non-default databases sweep the right place;
           // the previous $warehouse/$tbl string-build was only correct
           // for the default database on a local filesystem)
-          val loc = spark.sessionState.catalog.defaultTablePath(
-            org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-          storage.delete(new org.apache.hadoop.fs.Path(loc).toString)
+          val loc = spark.sessionState.catalog.defaultTablePath(TableIdentifier(tbl))
+          storage.delete(new Path(loc).toString)
         }
       } else storage.delete(spec.rawDir(s.name))
     }

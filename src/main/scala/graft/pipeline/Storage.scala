@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.util.control.NonFatal
 
 /** Storage control plane over the Hadoop FileSystem API — one code path
   * for s3a:// and file:// alike (replaces the reference's boto3
@@ -66,61 +68,57 @@ final class Storage(conf: Configuration) {
   }
 }
 
-/** Exclusive per-workspace lease, arbitrating concurrent jobs that
-  * share one staging workspace (two schedulers launching the same job,
-  * a retry racing its hung predecessor). The workspace directories are
-  * a fault domain — staged datasets, checkpoint markers, catalog
-  * tables all key on it — so two writers interleaving is undefined;
-  * the lease makes the second writer fail fast instead.
+/** Exclusive lock file: the one lock protocol of the control plane.
+  * The pipeline's workspace lease (`<workspace>/_LEASE`) uses it
+  * non-blocking; the keyed table's maintenance lock
+  * (`_commits/.maint.lock`) waits on it.
   *
-  * Mechanics: atomic create-if-absent of `_LEASE` under the workspace
-  * (atomic on HDFS and file:// — object stores need a conditional-put
-  * or an external lock service; same caveat as every marker-file
-  * protocol). A holder that dies without releasing is taken over once
-  * the marker's mtime is older than `ttlMs`; live holders call
-  * [[renew]] between units of work to keep the mtime fresh.
-  */
-final class WorkspaceLease(
-    conf: Configuration,
-    workspace: String,
-    ttlMs: Long = 15 * 60 * 1000) {
+  * Acquire is an exclusive create that writes the holder's token.
+  * A holder that dies without releasing is taken over once the file's
+  * mtime is older than `staleMs`; live holders call [[renew]] between
+  * units of work to keep it fresh. Takeover renames the stale file
+  * aside to a stealer-unique name: the rename succeeds for exactly one
+  * stealer, so two contenders that saw the same stale lock cannot both
+  * tear it down and both hold (a delete-based takeover's TOCTOU). A
+  * stealer whose rename caught a fresh lock instead (it was re-created
+  * between the stale check and the rename) renames it back; a third
+  * contender creating the lock between those two renames still races,
+  * a window two renames wide. Release deletes the file only while it
+  * still carries our token, so a holder stalled past `staleMs` never
+  * deletes its thief's lock.
+  *
+  * Atomic on HDFS and the local filesystem; object stores need a
+  * conditional put or an external lock service, the caveat of every
+  * marker-file protocol. */
+final class LockFile(conf: Configuration, path: Path, staleMs: Long) {
 
-  private val path = new Path(workspace, "_LEASE")
   private def fs: FileSystem = path.getFileSystem(conf)
-  val holderId: String = java.util.UUID.randomUUID().toString
+  private val token = java.util.UUID.randomUUID().toString
 
-  /** Create-if-absent — the atomic point of the protocol. HDFS
-    * `create(overwrite=false)` is atomic at the namenode, but the
-    * LOCAL FileSystem implements it as exists-then-create (two racing
-    * writers can both "win"), so file:// goes through O_CREAT|O_EXCL
-    * instead. */
-  private def createExclusive(f: FileSystem): Boolean =
-    if (f.getScheme == "file") {
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(path.toUri.getPath),
-          holderId.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      try {
-        val out = f.create(path, false)
-        try out.write(holderId.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    }
-
-  /** One attempt; false when a live (unexpired) holder exists. */
+  /** One attempt; false while a live (fresh) holder exists. */
   def tryAcquire(): Boolean = {
     val f = fs
     f.mkdirs(path.getParent)
-    if (createExclusive(f)) true
+    create(f) || (isStale(f, path) && stealStale(f) && create(f))
+  }
+
+  private def create(f: FileSystem): Boolean =
+    LockFile.createExclusive(f, path, token.getBytes("UTF-8"))
+
+  private def isStale(f: FileSystem, p: Path): Boolean =
+    try System.currentTimeMillis() - f.getFileStatus(p).getModificationTime > staleMs
+    catch { case _: java.io.FileNotFoundException => false }
+
+  private def stealStale(f: FileSystem): Boolean = {
+    val parked = new Path(path.getParent, s"${path.getName}.stale.$token")
+    val won = try f.rename(path, parked) catch { case NonFatal(_) => false }
+    if (!won) false
+    else if (isStale(f, parked)) { f.delete(parked, false); true }
     else {
-      val expired =
-        try System.currentTimeMillis() - f.getFileStatus(path).getModificationTime > ttlMs
-        catch { case _: java.io.FileNotFoundException => true } // released in between
-      if (expired) { f.delete(path, false); tryAcquire() } else false
+      // a fresh lock: rename it back (same file, so a holder still
+      // writing its token loses nothing)
+      if (!f.rename(parked, path)) f.delete(parked, false)
+      false
     }
   }
 
@@ -131,13 +129,38 @@ final class WorkspaceLease(
       finally in.close()
     } catch { case _: java.io.IOException => None }
 
-  def isHeld: Boolean = currentHolder().contains(holderId)
+  def isHeld: Boolean = currentHolder().contains(token)
 
-  /** Heartbeat: bump the marker's mtime so the TTL window restarts. */
+  /** Heartbeat: bump the file's mtime so the staleness window restarts. */
   def renew(): Unit = if (isHeld) fs.setTimes(path, System.currentTimeMillis(), -1)
 
-  /** Release only if still ours (a TTL takeover may have replaced us). */
-  def release(): Unit = if (isHeld) { fs.delete(path, false); () }
+  /** Best effort: a lock left behind goes stale and is taken over. */
+  def release(): Unit =
+    try { if (isHeld) fs.delete(path, false); () } catch { case NonFatal(_) => () }
+}
+
+object LockFile {
+
+  /** Atomic create-no-overwrite of `p` holding `body`. Hadoop's local
+    * filesystems check exists() and then create, a window two racing
+    * writers on one machine can both pass, so local goes through NIO's
+    * O_CREAT|O_EXCL (matched by class: `RawLocalFileSystem` subclasses
+    * count); every other store keeps its own `create(overwrite =
+    * false)` contract (atomic on HDFS). */
+  def createExclusive(f: FileSystem, p: Path, body: Array[Byte]): Boolean = f match {
+    case _: LocalFileSystem | _: RawLocalFileSystem =>
+      try {
+        Files.write(Paths.get(p.toUri.getPath), body, StandardOpenOption.CREATE_NEW)
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    case other =>
+      try {
+        val out = other.create(p, false)
+        try out.write(body) finally out.close()
+        true
+      } catch { case _: FileAlreadyExistsException => false }
+  }
+
 }
 
 /** C6 — retry with exponential backoff (ref py:19-36: 3 attempts, 5 s

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.pipeline.LockFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -682,7 +683,8 @@ object KeyedTable {
       if (reserved.nonEmpty) reserved.max
       else manifests(path, conf).map(_.seq).foldLeft(0L)(math.max)
     var n = base + 1L
-    while (!createExclusive(f, new Path(s"$path/_commits", s".seq-$n.res")))
+    while (!LockFile.createExclusive(f,
+        new Path(s"$path/_commits", s".seq-$n.res"), Array.emptyByteArray))
       n += 1L
     n
   }
@@ -696,106 +698,29 @@ object KeyedTable {
         n.stripPrefix(".seq-").stripSuffix(".res").toLong).toOption)
   }
 
-  /** Atomic create-no-overwrite. Hadoop's local filesystems check
-    * exists() then create — a TOCTOU window two racing commits on one
-    * machine can actually hit — so local goes through NIO's
-    * O_CREAT|O_EXCL instead; every other store keeps its own
-    * createNewFile contract (atomic on HDFS). */
-  private def createExclusive(f: FileSystem, p: Path): Boolean = f match {
-    case _: org.apache.hadoop.fs.LocalFileSystem |
-         _: org.apache.hadoop.fs.RawLocalFileSystem =>
-      try {
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(p.toUri.getPath))
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    case other => other.createNewFile(p)
-  }
-
   /** Serializes SUPERSEDING commits (rewrite / overwrite / truncate) —
     * plain appends never take it. Two superseding commits racing on
     * stale listings could otherwise both publish and leave a folded
     * input live next to the fold that consumed it (e.g. a rewrite
     * whose tombstone input a second rewrite superseded — the deleted
     * key would resurrect). The lock makes [list live / validate /
-    * publish] atomic.
-    *
-    * Acquisition is an exclusive create, then an OWNERSHIP STAMP (a
-    * waiter-unique token written into the lock and read back — only
-    * the waiter whose token survives enters the critical section). A
-    * lock abandoned by a crash goes stale after 60s and is taken over
-    * BY RENAME: renaming the stale lock aside to a stealer-unique
-    * name is atomic and succeeds for exactly one stealer, so two
-    * waiters observing the same stale lock can never both tear it
-    * down and end up holding simultaneously (the delete-based
-    * takeover's TOCTOU); the rename loser just re-observes a FRESH
-    * lock and waits. Release deletes the lock only while it still
-    * carries the holder's own token — a holder stalled past the
-    * staleness TTL (GC pause) whose lock was stolen must not delete
-    * the thief's. */
+    * publish] atomic. It is a [[LockFile]] (exclusive create of a
+    * token-stamped lock, rename-aside takeover of a lock abandoned by
+    * a crash, token-checked release) waited on for up to 30s; a lock
+    * goes stale after 60s. */
   private def withMaintenanceLock[A](path: String,
       conf: Configuration)(body: => A): A = {
-    val f = fs(path, conf)
     ensureDirs(path, conf)
-    val dir = new Path(path, "_commits")
-    val lock = new Path(dir, ".maint.lock")
-    val token = java.util.UUID.randomUUID().toString
+    val lockPath = new Path(s"$path/_commits", ".maint.lock")
+    val lock = new LockFile(conf, lockPath, staleMs = 60000L)
     val deadline = System.currentTimeMillis() + 30000L
-    var held = false
-    while (!held) {
-      if (createExclusive(f, lock)) {
-        // claim won — stamp ownership and confirm the stamp survived
-        // (a steal inside this window would need the fresh lock to
-        // look 60s stale, which it cannot; the read-back guards the
-        // protocol anyway)
-        try {
-          val out = f.create(lock, true)
-          try out.write(token.getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-          held = readText(f, lock) == token
-        } catch { case scala.util.control.NonFatal(_) => () }
-        if (!held) {
-          // a transient stamp failure must not leave OUR unstamped
-          // lock on disk: every waiter (us included) would then block
-          // on it until the 30s deadline, well inside the 60s
-          // staleness TTL — self-deadlock. Undo the claim, unless the
-          // file now carries someone ELSE's token (not plausibly ours
-          // to delete).
-          val other = try {
-            val c = readText(f, lock); c.nonEmpty && c != token
-          } catch { case scala.util.control.NonFatal(_) => false }
-          if (!other) { try { f.delete(lock, false); () }
-            catch { case scala.util.control.NonFatal(_) => () } }
-        }
-      } else {
-        val stale = (try Some(f.getFileStatus(lock)) catch {
-          case _: java.io.FileNotFoundException => None
-        }).exists(_.getModificationTime <
-          System.currentTimeMillis() - 60000L)
-        if (stale) {
-          // takeover by atomic rename: at most one stealer's rename
-          // succeeds; the winner reclaims via createExclusive on the
-          // next loop iteration, everyone else waits on the new lock
-          val parked = new Path(dir, s".maint.stale.$token")
-          val won = try f.rename(lock, parked)
-            catch { case scala.util.control.NonFatal(_) => false }
-          if (won) { try { f.delete(parked, false); () }
-            catch { case scala.util.control.NonFatal(_) => () } }
-        } else if (System.currentTimeMillis() > deadline)
-          throw new IllegalStateException(
-            s"KeyedTable maintenance lock at $lock not acquired in 30s")
-        else Thread.sleep(50)
-      }
+    while (!lock.tryAcquire()) {
+      if (System.currentTimeMillis() > deadline)
+        throw new IllegalStateException(
+          s"KeyedTable maintenance lock at $lockPath not acquired in 30s")
+      Thread.sleep(50)
     }
-    try body finally {
-      // delete only a lock that is still OURS
-      val own = try readText(f, lock) == token
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (own) { try { f.delete(lock, false); () }
-        catch { case scala.util.control.NonFatal(_) => () } }
-    }
+    try body finally lock.release()
   }
 
   /** Write one logical manifest: reserve the commit sequence (unless
@@ -1672,12 +1597,6 @@ object KeyedTable {
     // after this statement read — the optimistic-concurrency intruder
     private val pinnedMaxSeq: Long =
       pinnedLive.map(_.seq).foldLeft(0L)(math.max)
-    // commit-time conflict detection is ON unless the session opts out
-    // (spark.graft.rowlevel.conflicts=off restores blind-append LWW)
-    private val conflicts: Boolean = scala.util.Try(
-      org.apache.spark.sql.SparkSession.active.conf
-        .get("spark.graft.rowlevel.conflicts", "detect"))
-      .getOrElse("detect") != "off"
 
     override def command(): RowLevelOperation.Command = cmd
     override def description(): String =
@@ -1705,7 +1624,7 @@ object KeyedTable {
           if (info.schema().nonEmpty) validateSchema(info.schema())
           new KDeltaWrite(path, info.schema(), dataSchema, keys,
             writePartitions, info.queryId(), cmd,
-            if (conflicts) Some((pinned, pinnedMaxSeq)) else None)
+            (pinned, pinnedMaxSeq))
         }
       }
   }
@@ -2782,9 +2701,8 @@ object KeyedTable {
       // their effects (a lost update: both read v1, last manifest wins
       // wholesale). The loser aborts with a retryable
       // [[ConcurrentCommitException]]; disjoint-key concurrency passes
-      // (bucket tags and key zone maps prove disjointness). None =
-      // detection off: the pre-OCC blind-append behavior.
-      occ: Option[(Set[String], Long)])
+      // (bucket tags and key zone maps prove disjointness).
+      occ: (Set[String], Long))
       extends DeltaWrite with RequiresDistributionAndOrdering {
     private val pk = keys.head
     override def requiredDistribution(): Distribution =
@@ -2832,36 +2750,32 @@ object KeyedTable {
         val entries = tombs.map(entry(_, tomb = true)) ++
           data.map(entry(_, tomb = false))
         if (entries.isEmpty) return
-        def publish(): Unit = commitManifest(path,
-          s"rlo-${cmd.toString.toLowerCase}-${sanitize(queryId)}.manifest",
-          entries, conf.value,
-          ncols = (if (rowSchema.nonEmpty) rowSchema else tableSchema).length)
-        occ match {
-          case None => publish()
-          case Some((pinnedNames, pinnedMaxSeq)) =>
-            // [validate / publish] made atomic by the maintenance lock
-            // — concurrent row-level statements (and folds/overwrites)
-            // serialize here; NATIVE blind appends stay lock-free by
-            // design (they never read, so they cannot lose an update —
-            // Cassandra's upsert model; under LWW they resolve exactly
-            // as they would against the pre-statement versions)
-            withMaintenanceLock(path, conf.value) {
-              val intruders = liveManifests(path, conf.value).filter(m =>
-                !pinnedNames(m.name) && (m.seq < 0 || m.seq > pinnedMaxSeq))
-              val files = data ++ tombs
-              val clash = intruders.find(
-                _.entries.exists(e => mayOverlap(e, files)))
-              clash.foreach { m =>
-                throw new ConcurrentCommitException(
-                  s"concurrent commit ${m.name} (seq ${m.seq}) published " +
-                    s"rows overlapping this $cmd statement's keys after " +
-                    s"its snapshot was pinned at $path — committing would " +
-                    "lose its update under last-write-wins. The statement " +
-                    "read a stale snapshot; retry it (its re-read then " +
-                    "sees the winner's rows).")
-              }
-              publish()
-            }
+        val (pinnedNames, pinnedMaxSeq) = occ
+        // [validate / publish] made atomic by the maintenance lock
+        // — concurrent row-level statements (and folds/overwrites)
+        // serialize here; NATIVE blind appends stay lock-free by
+        // design (they never read, so they cannot lose an update —
+        // Cassandra's upsert model; under LWW they resolve exactly
+        // as they would against the pre-statement versions)
+        withMaintenanceLock(path, conf.value) {
+          val intruders = liveManifests(path, conf.value).filter(m =>
+            !pinnedNames(m.name) && (m.seq < 0 || m.seq > pinnedMaxSeq))
+          val files = data ++ tombs
+          val clash = intruders.find(
+            _.entries.exists(e => mayOverlap(e, files)))
+          clash.foreach { m =>
+            throw new ConcurrentCommitException(
+              s"concurrent commit ${m.name} (seq ${m.seq}) published " +
+                s"rows overlapping this $cmd statement's keys after " +
+                s"its snapshot was pinned at $path — committing would " +
+                "lose its update under last-write-wins. The statement " +
+                "read a stale snapshot; retry it (its re-read then " +
+                "sees the winner's rows).")
+          }
+          commitManifest(path,
+            s"rlo-${cmd.toString.toLowerCase}-${sanitize(queryId)}.manifest",
+            entries, conf.value,
+            ncols = (if (rowSchema.nonEmpty) rowSchema else tableSchema).length)
         }
       }
 

@@ -4,6 +4,7 @@ import graft.ops.Relational
 import graft.pipeline._
 import graft.queries.PipelineQueries
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /** E2E tests of the L2 runtime's behavioral contracts (SURVEY.md §7.4):
@@ -36,6 +37,9 @@ class PipelineSpec extends SparkSpecBase {
       .count()
 
   private def expr(s: String) = org.apache.spark.sql.functions.expr(s)
+
+  private def lease(ws: String, ttlMs: Long = 15 * 60 * 1000) =
+    new LockFile(spark.sparkContext.hadoopConfiguration, new Path(ws, "_LEASE"), ttlMs)
 
   test("full run: staged layout, checkpoints, and loaded rows") {
     val sp = run(freshWorkspace())
@@ -101,83 +105,6 @@ class PipelineSpec extends SparkSpecBase {
       retryInitialDelayMs = 1)
     p2.runAll()
     assert(p2.stageCounts.isEmpty)
-  }
-
-  test("parallel runAll: disjoint tables genuinely race under one lease") {
-    val ws = freshWorkspace()
-    val t1 = TableSpec("t_cust_orders",
-      Seq(SourceSpec("orders"), SourceSpec("customer")),
-      root = "orders",
-      joins = Seq(JoinSpec("customer", "o_custkey", "c_custkey")),
-      transformedColumns = Seq("o_orderkey AS k", "c_name AS customer_name"))
-    val t2 = TableSpec("t_supp_nation",
-      Seq(SourceSpec("supplier"), SourceSpec("nation")),
-      root = "supplier",
-      joins = Seq(JoinSpec("nation", "s_nationkey", "n_nationkey")),
-      transformedColumns = Seq("s_suppkey AS k", "n_name AS nation"))
-    val sp = JobSpec(ws, Seq(t1, t2))
-    // proof of true concurrency: each table's root-source extract
-    // blocks on a two-party barrier — only two tables IN FLIGHT AT
-    // ONCE can both reach it; a sequential driver times out the first
-    // await and the flag stays false
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    @volatile var concurrent = false
-    val src: SourceSpec => DataFrame = s2 => {
-      if (s2.name == "orders" || s2.name == "supplier") {
-        try {
-          barrier.await(20, java.util.concurrent.TimeUnit.SECONDS)
-          concurrent = true
-        } catch { case _: Exception => () }
-      }
-      Relational.scanParquet(spark, s"$sfDir/${s2.name}.parquet")
-    }
-    new Pipeline(spark, sp, src, retryInitialDelayMs = 1).runAll(parallelism = 2)
-    assert(concurrent, "tables with disjoint sources did not run concurrently")
-    // no interleaved checkpoint state: each table's checkpoint dir
-    // holds markers for exactly its own transformed files
-    val storage = new Storage(spark.sparkContext.hadoopConfiguration)
-    Seq("t_cust_orders", "t_supp_nation").foreach { t =>
-      val files = storage.listParquet(sp.transformedDir(t))
-        .map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-      assert(files.nonEmpty)
-      val markers = new java.io.File(sp.checkpointDir(t)).list()
-        .filter(_.endsWith(".checkpoint"))
-        .map(_.stripSuffix(".checkpoint")).toSet
-      assert(markers === files,
-        s"$t checkpoints ($markers) don't match its transformed files ($files)")
-    }
-    assert(spark.read.parquet(sp.targetDir("t_cust_orders")).count() ===
-      spark.read.parquet(s"$sfDir/orders.parquet").count())
-    assert(spark.read.parquet(sp.targetDir("t_supp_nation")).count() ===
-      spark.read.parquet(s"$sfDir/supplier.parquet").count())
-  }
-
-  test("parallel runAll: tables sharing a source run in separate waves, extract once") {
-    val ws = freshWorkspace()
-    def table(name: String, dim: String, joinL: String, joinR: String,
-        cols: Seq[String]) = TableSpec(name,
-      Seq(SourceSpec("orders"), SourceSpec(dim)),
-      root = "orders", joins = Seq(JoinSpec(dim, joinL, joinR)),
-      transformedColumns = cols)
-    val sp = JobSpec(ws, Seq(
-      table("t_a", "customer", "o_custkey", "c_custkey",
-        Seq("o_orderkey AS k", "c_name AS customer_name")),
-      table("t_b", "customer", "o_custkey", "c_custkey",
-        Seq("o_orderkey AS k", "c_mktsegment AS segment"))))
-    val extracts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val src: SourceSpec => DataFrame = s2 => {
-      extracts.merge(s2.name, 1, (a, b) => a + b)
-      Relational.scanParquet(spark, s"$sfDir/${s2.name}.parquet")
-    }
-    new Pipeline(spark, sp, src, retryInitialDelayMs = 1).runAll(parallelism = 2)
-    // wave scheduling: t_b waited for t_a, found orders/customer staged,
-    // and extracted NOTHING — one staging job per source, never a race
-    assert(extracts.get("orders") === 1,
-      s"shared source extracted ${extracts.get("orders")} times")
-    assert(extracts.get("customer") === 1)
-    val n = spark.read.parquet(s"$sfDir/orders.parquet").count()
-    assert(spark.read.parquet(sp.targetDir("t_a")).count() === n)
-    assert(spark.read.parquet(sp.targetDir("t_b")).count() === n)
   }
 
   test("footer row counts match data row counts") {
@@ -250,17 +177,6 @@ class PipelineSpec extends SparkSpecBase {
         |"root":"a","joins":[],"transformedColumns":["x AS y"]}]}""".stripMargin)
     assert(hand.tables.head.sources.head.filter === Some("x > 1"))
     assert(hand.tables.head.sources.head.numPartitions === 4)
-  }
-
-  test("keyed append sink: partition-key-grouped layout, same rows") {
-    val ws = freshWorkspace()
-    val sp = run(ws, sink = KeyedParquetAppendSink("nation", taskParallelism = 4))
-    val target = sp.targetDir("enriched_lineitem")
-    val loaded = spark.read.parquet(target)
-    assert(loaded.count() === expectedRows)
-    // key-partitioned directory layout (hive-style nation=... dirs)
-    val dirs = new java.io.File(target).listFiles().filter(_.isDirectory).map(_.getName)
-    assert(dirs.nonEmpty && dirs.forall(_.startsWith("nation=")))
   }
 
   test("exactly-once sink: crash between write and checkpoint does not duplicate") {
@@ -442,9 +358,13 @@ class PipelineSpec extends SparkSpecBase {
       case s if s.name == "nation" => s.copy(bucketKey = Some("n_nationkey"))
       case s => s
     })))
-    def runIt() = new Pipeline(spark, bucketed,
-      src => Relational.scanParquet(spark, s"$sfDir/${src.name}.parquet"),
-      retryInitialDelayMs = 1).runAll()
+    def runIt(): Pipeline = {
+      val p = new Pipeline(spark, bucketed,
+        src => Relational.scanParquet(spark, s"$sfDir/${src.name}.parquet"),
+        retryInitialDelayMs = 1)
+      p.runAll()
+      p
+    }
     runIt()
     assert(spark.read.parquet(bucketed.targetDir("enriched_lineitem"))
       .count() === expectedRows)
@@ -465,8 +385,11 @@ class PipelineSpec extends SparkSpecBase {
     assert(new scala.reflect.io.Directory(
       new java.io.File(ws)).deleteRecursively())
 
-    runIt() // must detect the unreadable table and rebuild it
-    assert(spark.table(tbl).count() > 0)
+    val rebuilt = runIt() // must detect the unreadable table and rebuild it
+    val nationRows = spark.table(tbl).count()
+    assert(nationRows > 0)
+    // the rebuild is an extract like any other: its row count is observed
+    assert(rebuilt.stageCounts.get("enriched_lineitem/extract_nation") === Some(nationRows))
     assert(spark.read.parquet(bucketed.targetDir("enriched_lineitem"))
       .count() === expectedRows)
   }
@@ -509,9 +432,8 @@ class PipelineSpec extends SparkSpecBase {
 
   test("workspace lease: exclusivity, release, TTL takeover, renew") {
     val ws = freshWorkspace()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val a = new WorkspaceLease(conf, ws)
-    val b = new WorkspaceLease(conf, ws)
+    val a = lease(ws)
+    val b = lease(ws)
     assert(a.tryAcquire())
     assert(!b.tryAcquire(), "second writer must not acquire a held lease")
     assert(a.isHeld && !b.isHeld)
@@ -520,9 +442,9 @@ class PipelineSpec extends SparkSpecBase {
     b.release()
 
     // TTL takeover: a holder that died without releasing
-    val dead = new WorkspaceLease(conf, ws, ttlMs = 50)
+    val dead = lease(ws, ttlMs = 50)
     assert(dead.tryAcquire())
-    val taker = new WorkspaceLease(conf, ws, ttlMs = 50)
+    val taker = lease(ws, ttlMs = 50)
     Thread.sleep(120)
     assert(taker.tryAcquire(), "expired lease must be taken over")
     assert(!dead.isHeld, "takeover replaces the dead holder's marker")
@@ -532,9 +454,44 @@ class PipelineSpec extends SparkSpecBase {
     // renew restarts the TTL window
     Thread.sleep(120)
     taker.renew()
-    val late = new WorkspaceLease(conf, ws, ttlMs = 1000)
+    val late = lease(ws, ttlMs = 1000)
     assert(!late.tryAcquire(), "renewed lease is not expired")
     taker.release()
+  }
+
+  test("workspace lease: racing takeovers of one expired lease elect exactly one holder") {
+    val ws = freshWorkspace()
+    (1 to 25).foreach { round =>
+      val dead = lease(ws)
+      assert(dead.tryAcquire())
+      assert(new java.io.File(ws, "_LEASE")
+        .setLastModified(System.currentTimeMillis() - 60000L))
+      val contenders = Seq(lease(ws, ttlMs = 10000), lease(ws, ttlMs = 10000))
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val acquired = new java.util.concurrent.ConcurrentLinkedQueue[LockFile]()
+      val threads = contenders.map { c =>
+        val th = new Thread(() => { gate.await(); if (c.tryAcquire()) acquired.add(c) })
+        th.start(); th
+      }
+      gate.countDown()
+      threads.foreach(_.join(30000))
+      assert(acquired.size === 1, s"round $round: ${acquired.size} holders")
+      val winner = acquired.peek()
+      val loser = contenders.find(_ ne winner).get
+      assert(!dead.isHeld && !loser.isHeld)
+      loser.release()
+      assert(winner.isHeld, s"round $round: the loser's release dropped the winner")
+      winner.release()
+    }
+  }
+
+  test("q_migrate_v2_e2e leaves the session conf as it found it") {
+    // a fresh session: an earlier pipeline run in the shared one must
+    // not have set (and so hidden) what this run would set
+    val s = spark.newSession()
+    val confBefore = s.conf.getAll
+    assert(Catalog.byName("q_migrate_v2_e2e").fn(s, sfDir).collect().nonEmpty)
+    assert(s.conf.getAll === confBefore)
   }
 
   test("two concurrent pipelines on one workspace: one runs, one fails fast") {

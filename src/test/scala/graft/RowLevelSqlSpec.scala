@@ -488,27 +488,6 @@ class RowLevelSqlSpec extends SparkSpecBase {
     }
   }
 
-  test("spark.graft.rowlevel.conflicts=off restores blind-commit LWW " +
-      "(the pre-OCC behavior, lost update and all)") {
-    val t = tmpDir("graft_rlo_occ_off_") + "/t"
-    sink.append(rows(0, 10, "a"), t)
-    withCatalog {
-      spark.conf.set("spark.graft.rowlevel.conflicts", "off")
-      try {
-        val failure = interleave(mergeSql(t, 0, 5)) {
-          spark.sql(s"UPDATE ${ident(t)} SET c = c + 1000 WHERE k < 5")
-        }
-        assert(failure.isEmpty,
-          s"with detection off both must commit: ${failure.map(_.getMessage)}")
-        // the MERGE committed last: its manifest wholesale outranks the
-        // interleaved UPDATE — the documented lost update
-        val got = state(t)
-        (0L until 5L).foreach(k => assert(got(k) === ((s"m$k", k * 7)),
-          s"LWW must hand key $k to the last committer, got ${got(k)}"))
-      } finally spark.conf.unset("spark.graft.rowlevel.conflicts")
-    }
-  }
-
   test("historical handles refuse row-level writes") {
     val t = tmpDir("graft_rlo_asof_") + "/t"
     sink.append(rows(0, 4, "a"), t)
